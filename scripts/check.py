@@ -92,5 +92,13 @@ for name in sorted(oracle):
         fails.append(name)
         print(f"ERROR {name}: {e}")
 
-print(f"\n{len(oracle) - len(fails)}/{len(oracle)} queries match")
-sys.exit(1 if fails else 0)
+# queries that threw in graft.Verify, oracle-checked or not (a failed
+# rows-only query would otherwise vanish from this report)
+failed_json = Path(OUT) / "failed.json"
+failed = json.loads(failed_json.read_text()) if failed_json.exists() else {}
+for name in sorted(failed):
+    print(f"FAILED {name}: {failed[name][:300]}")
+
+print(f"\n{len(oracle) - len(fails)}/{len(oracle)} queries match"
+      + (f"; {len(failed)} failed in Verify" if failed else ""))
+sys.exit(1 if fails or failed else 0)

@@ -5,6 +5,9 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 /** Benchmark entry (driver contract, BASELINE.md): runs every
   * SparkEntry query against SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -57,31 +60,21 @@ object Bench {
     // when a GC collects the weak references — and a 24 GB heap under a
     // ~1 GB working set can go hundreds of queries without one, so the
     // executor accumulates every query's broadcast blocks and shuffle
-    // files. The GC cadence is a measured optimum (BENCH_GC_EVERY to
-    // A/B): every query costs each NEXT timed query ~0.2-0.7 s of
-    // post-GC re-warmup (suite 180 s); never lets the accumulation
-    // compound catastrophically (suite 404 s); every ~10 amortizes the
-    // re-warmup to noise while keeping the pressure bounded. The
-    // 120 ms pause lets the cleaner thread — which polls its reference
-    // queue on a 100 ms tick — drain the newly-enqueued refs before
-    // the next query starts.
-    if (sinceGc.incrementAndGet() % gcEvery == 0) {
+    // files. The GC cadence is a measured optimum: every query costs
+    // each NEXT timed query ~0.2-0.7 s of post-GC re-warmup (suite
+    // 180 s); never lets the accumulation compound catastrophically
+    // (suite 404 s); every ~10 amortizes the re-warmup to noise while
+    // keeping the pressure bounded. The 120 ms pause lets the cleaner
+    // thread — which polls its reference queue on a 100 ms tick — drain
+    // the newly-enqueued refs before the next query starts.
+    if (sinceGc.incrementAndGet() % GcEvery == 0) {
       System.gc()
       Thread.sleep(120)
     }
   }
 
   private val sinceGc = new java.util.concurrent.atomic.AtomicInteger(0)
-  private lazy val gcEvery =
-    sys.env.getOrElse("BENCH_GC_EVERY", "10").toInt
-
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case c if c < ' '  => "\\u%04x".format(c.toInt)
-      case c             => c.toString
-    }
+  private val GcEvery = 10
 
   /** 1-minute load average, or -1 outside Linux — recorded before and
     * after the run so a noisy-neighbor-inflated bench is identifiable
@@ -101,10 +94,8 @@ object Bench {
     // artifact — but WAIT (bounded) for the machine to drain, then tag
     // the artifact "clean"/"contaminated" so a hot start is adjudicable
     // from the JSON alone.
-    val loadGateMax =
-      sys.env.getOrElse("BENCH_LOAD_GATE", "2.0").toDouble
-    val loadWaitSecs =
-      sys.env.getOrElse("BENCH_LOAD_WAIT_SECS", "120").toInt
+    val loadGateMax = 2.0
+    val loadWaitSecs = 120
     var waited = 0
     while (loadAvg() > loadGateMax && waited < loadWaitSecs) {
       System.err.println(
@@ -119,49 +110,7 @@ object Bench {
         f"bench: STARTING HOT at loadavg $loadBefore%.2f after ${waited}s " +
           "wait — artifact tagged contaminated")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitions sized to the DATA, not the cores: at sf0.1
-    // (~50 MB) more than ~8 partitions is pure scheduling overhead
-    // (measured: 32 partitions on 32 threads is 1.5x slower than 4/4).
-    // At cluster scale this would be data/128MB; AQE coalesces down.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(cpus.toInt, 8).toString)
-    // Codegen class cache (STATIC conf, must be set at first-session
-    // creation): Spark's default 100 entries thrashes under a 229-query
-    // suite — every timed pass regenerates + recompiles + class-loads
-    // every plan's codegen (the warmup pass's compilations are evicted
-    // long before the timed pass returns to the same query, and the
-    // d32/p07 driver loops alone mint hundreds of distinct plans),
-    // churning the JIT code cache; the churn's sweep storms were the
-    // wandering 2–10× in-suite-vs-solo victims (d22 66 s in r13, p07
-    // 74 s in the r14 after-stash run). Measured full-suite A/B on
-    // identical code: 100 → 430.1 s, 2000 → 240.5 s, 8000 → 218.4 s,
-    // with zero >0.5 s per-query regressions and in-suite ≈ solo for
-    // every query at 8000. Scale-independent (a driver-side compile
-    // cache — cluster drivers reuse generated classes the same way);
-    // env-overridable for A/B.
-    val codegenCache =
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.codegen.cache.maxEntries", codegenCache)
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle-file cleanup normally fires asynchronously from the
-      // ContextCleaner; blocking keeps the 360-execution suite from
-      // stacking dead shuffle files faster than they're removed
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      // the status stores retain per-execution plan graphs/metrics and
-      // per-stage/task rows even with the UI off; at 120 queries x 3
-      // passes (x dozens of AQE stages each) that retained state is
-      // pure growth — keep only a handful for post-mortem
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
+    val spark = Session(shuffle = Session.dataShuffle)
     spark.sparkContext.setLogLevel("ERROR")
 
     // BENCH_ONLY=d02_minhash_lsh,d04_ngram_jaccard runs a subset — for
@@ -207,22 +156,17 @@ object Bench {
         case (None, None)       => None
       }
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) =>
-      "\"" + k + "\":\"" + jsonEscape(v) + "\""
-    }.mkString("{", ",", "}")
+    def obj(kv: Seq[(String, Double)]): JObject =
+      JObject(kv.map { case (k, v) => k -> JDouble(v) }.toList)
     val total = results.map(_._2).sum
     // anchor ratios: each query / d01 (a single map-side-combine groupBy
     // — the simplest stable full-scan job in the suite). Ratios survive
     // noisy neighbors that absolute seconds don't, so cross-round
     // comparisons have a load-independent signal.
     val anchor = results.collectFirst { case ("d01_exact_dedup", v) => v }
-    val anchorJson = anchor match {
-      case Some(a) if a > 0 =>
-        results.map { case (k, v) => "\"" + k + "\":" + (v / a) }
-          .mkString("{", ",", "}")
-      case _ => "{}"
+    val anchorRatios = anchor match {
+      case Some(a) if a > 0 => results.map { case (k, v) => k -> v / a }
+      case _ => Nil
     }
     // second anchor: the suite median. d01 is a single-stage scan that
     // barely suffers machine contention, so d01-ratios overstate
@@ -237,11 +181,9 @@ object Bench {
       else if (sorted.size % 2 == 1) sorted(sorted.size / 2)
       else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2
     }
-    val medianRatioJson =
-      if (medianSec > 0)
-        results.map { case (k, v) => "\"" + k + "\":" + (v / medianSec) }
-          .mkString("{", ",", "}")
-      else "{}"
+    val medianRatios =
+      if (medianSec > 0) results.map { case (k, v) => k -> v / medianSec }
+      else Nil
     // DRIFT-ROBUST baseline comparison (round 12): the official
     // artifact is graded cross-round, but two same-code official runs
     // measured 14% apart (r10 266.8 s vs an A/B re-run at 306.6 s —
@@ -260,9 +202,7 @@ object Bench {
         val p = Paths.get(baselinePath)
         if (!Files.exists(p)) None
         else {
-          import org.json4s._
-          val j = jackson.JsonMethods.parse(
-            new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+          val j = parse(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
           (j \ "queries") match {
             case JObject(fields) =>
               Some(fields.collect {
@@ -323,15 +263,9 @@ object Bench {
           } finally released(spark)
         }
       }
-    val outlierJson = outlierSolo.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val vsBaseScalars = vsBase.map { case (gm, rels) =>
-      s""","vs_base_mednorm_gm":$gm,"n_base_shared":${rels.size}"""
-    }.getOrElse("")
-    val vsBaseJson = vsBase.map { case (_, rels) =>
-      rels.map { case (k, r) => "\"" + k + "\":" + r }
-        .mkString("{", ",", "}")
-    }.getOrElse("{}")
+    val vsBaseScalars: JObject =
+      ("vs_base_mednorm_gm" -> vsBase.map(_._1)) ~
+        ("n_base_shared" -> vsBase.map(_._2.size))
     val loadAfter = loadAvg()
     // DRIVER-VISIBLE PER-QUERY TIMINGS (round 14): the driver parses the
     // LAST stdout line as JSON and stores only a 2000-char tail (every
@@ -344,31 +278,35 @@ object Bench {
     // tail, most expensive queries first (the perf-relevant ones), with
     // the truncation explicit (n_q_reported / n_q_total — no silent
     // caps). The complete map still lives in BENCH_OUT below.
-    def fmt(d: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    val scalarHead =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_ok":${results.size},"n_err":${errors.size},"median_sec":${fmt(medianSec)},"anchor_sec":${fmt(anchorSec)},"total_over_median":${fmt(if (medianSec > 0) total / medianSec else 0.0)}$vsBaseScalars,"n_outliers":${outliers.size},"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"load_gate":"$loadGate","sf":"$sfDir""""
-    val qsCompact: (String, Int) = {
-      // stop at the FIRST entry that overflows so the reported set is
-      // exactly the top-N by time, not "whatever short names squeezed in"
-      val tailFixed = s""","queries":{},"n_q_reported":999,"n_q_total":${results.size}}"""
-      val budget = 1980 - scalarHead.length - tailFixed.length
-      val sb = new StringBuilder
-      var n = 0
-      var full = false
-      results.sortBy(-_._2).foreach { case (k, v) =>
-        if (!full) {
-          val entry = (if (n == 0) "" else ",") + "\"" + k + "\":" + fmt(v)
-          if (sb.length + entry.length <= budget) { sb ++= entry; n += 1 }
-          else full = true
-        }
-      }
-      ("{" + sb.toString + "}", n)
-    }
-    val summary =
-      s"""$scalarHead,"queries":${qsCompact._1},"n_q_reported":${qsCompact._2},"n_q_total":${results.size}}"""
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"anchor_ratios":$anchorJson,"anchor_query":"d01_exact_dedup","anchor_median_sec":$medianSec,"anchor_ratios_median":$medianRatioJson,"vs_base_mednorm":$vsBaseJson,"baseline_file":"${jsonEscape(baselinePath)}"$vsBaseScalars,"outlier_solo":$outlierJson,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"load_gate":"$loadGate","errors":$errJson,"n_ok":${results.size},"n_err":${errors.size},"sf":"$sfDir"}"""
+    def ms(d: Double): JValue =
+      JDecimal(BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP))
+    val byTime = results.sortBy(-_._2)
+    def summary(n: Int): String = compact(render(
+      ("metric" -> "total") ~ ("value" -> ms(total)) ~ ("unit" -> "sec") ~
+        ("n_ok" -> results.size) ~ ("n_err" -> errors.size) ~
+        ("median_sec" -> ms(medianSec)) ~ ("anchor_sec" -> ms(anchorSec)) ~
+        ("total_over_median" -> ms(if (medianSec > 0) total / medianSec else 0.0)) ~
+        vsBaseScalars ~ ("n_outliers" -> outliers.size) ~
+        ("loadavg_before" -> loadBefore) ~ ("loadavg_after" -> loadAfter) ~
+        ("load_gate" -> loadGate) ~ ("sf" -> sfDir) ~
+        ("queries" -> JObject(byTime.take(n).map { case (k, v) => k -> ms(v) }.toList)) ~
+        ("n_q_reported" -> n) ~ ("n_q_total" -> results.size)))
+    // stop at the FIRST entry that overflows so the reported set is
+    // exactly the top-N by time, not "whatever short names squeezed in"
+    val nReported = (1 to byTime.size).takeWhile(summary(_).length <= 1980)
+      .lastOption.getOrElse(0)
+    val line = compact(render(
+      ("metric" -> "total") ~ ("value" -> total) ~ ("unit" -> "sec") ~
+        ("queries" -> obj(results)) ~ ("anchor_ratios" -> obj(anchorRatios)) ~
+        ("anchor_query" -> "d01_exact_dedup") ~ ("anchor_median_sec" -> medianSec) ~
+        ("anchor_ratios_median" -> obj(medianRatios)) ~
+        ("vs_base_mednorm" -> obj(vsBase.map(_._2).getOrElse(Nil))) ~
+        ("baseline_file" -> baselinePath) ~ vsBaseScalars ~
+        ("outlier_solo" -> obj(outlierSolo)) ~
+        ("loadavg_before" -> loadBefore) ~ ("loadavg_after" -> loadAfter) ~
+        ("load_gate" -> loadGate) ~
+        ("errors" -> JObject(errors.toList.map { case (k, v) => k -> JString(v) })) ~
+        ("n_ok" -> results.size) ~ ("n_err" -> errors.size) ~ ("sf" -> sfDir)))
     // a BENCH_ONLY subset is an iteration aid, never the round's perf
     // artifact — writing it to bench_out.json clobbered the full-suite
     // numbers twice (caught by review both times); partial runs go to a
@@ -378,6 +316,6 @@ object Bench {
     Files.write(Paths.get(outPath), (line + "\n").getBytes(StandardCharsets.UTF_8))
     spark.stop()
     // last stdout line, after spark.stop() so no shutdown logs trail it
-    println(summary)
+    println(summary(nReported))
   }
 }

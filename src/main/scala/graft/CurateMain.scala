@@ -63,14 +63,7 @@ object CurateMain {
     val textCol = kv.getOrElse("--text-col", "text")
     val sourceCol = kv.getOrElse("--source-col", "source")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(sys.env.getOrElse("SPARK_MASTER", "local[*]"), shuffle = 32)
     try run(spark, corpusPath, outDir, format, kv.get("--benchmark"),
       tau, budget, idCol, textCol, sourceCol)
     finally spark.stop()

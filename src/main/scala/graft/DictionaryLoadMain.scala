@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.JdbcMirror
 import graft.sources.DictionaryLoader
 
@@ -64,13 +62,7 @@ object DictionaryLoadMain {
     require(!specs.exists(s => isHttp(s._2)) || kv.contains("--landing-dir"),
       s"--landing-dir is required when a source is an http(s) URL\n$usage")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     try {
       val fetcher = new DictionaryLoader.HttpFetcher()
       specs.foreach { case (table, src, cols) =>

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-import graft.etl.{FileLifecycle, IngestPipeline, JdbcMirror}
+import graft.etl.{Audit, FileLifecycle, IngestPipeline, JdbcMirror}
 
 /** CLI surface for the XML ingest path — the reference's primary
   * entry (`main_ingest.py:693-758`: positional xml path,
@@ -15,8 +13,9 @@ import graft.etl.{FileLifecycle, IngestPipeline, JdbcMirror}
   * }}}
   *
   * Runs the full batch pipeline and prints the resulting lake state
-  * (per-tag counts, FK edges, audit rows). With a jdbcUrl it also
-  * mirrors the batch (A12-A17) and the audit into that database; with
+  * (per-tag counts, FK edges, audit rows, md5s ingested more than
+  * once). With a jdbcUrl it also mirrors the batch (A12-A17) and the
+  * audit into that database; with
   * `--require-version` the mirror refuses unless the version is
   * registered in SchemaVersions (the reference's gate,
   * `main_ingest.py:729-738`). With `--archive-dir`/`--error-dir`,
@@ -53,13 +52,7 @@ object IngestDemo {
     require(flags.get("--require-version").isEmpty || jdbcUrl.nonEmpty,
       s"--require-version needs a jdbcUrl (the gate guards the mirror)\n$usage")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     val r = IngestPipeline.ingestDirectory(spark, xmlGlob, lakeDir)
     println(s"staged=${r.filesStaged.size} errored=${r.filesErrored.size} elements=${r.elementCount}")
@@ -101,8 +94,13 @@ object IngestDemo {
     }
 
     println("--- audit ---")
-    spark.read.parquet(IngestPipeline.auditPath(lakeDir))
-      .select("original_file_name", "status").orderBy("original_file_name")
+    val audit = spark.read.parquet(IngestPipeline.auditPath(lakeDir))
+    audit.select("original_file_name", "status").orderBy("original_file_name")
+      .collect().foreach(r => println(s"${r.get(0)}: ${r.get(1)}"))
+    // the reprocessing check over the audit log (SURVEY §2B): a replayed
+    // or re-delivered file shows up as one md5 ingested more than once
+    println("--- duplicate ingests ---")
+    Audit.duplicateIngests(audit).orderBy("md5_hash")
       .collect().foreach(r => println(s"${r.get(0)}: ${r.get(1)}"))
 
     spark.stop()

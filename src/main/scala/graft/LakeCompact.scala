@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Lake-maintenance CLI: `runMain graft.LakeCompact <lakeDir>
   * [targetRowsPerFile] [--sort-by-pcr]` — compacts the element lake's
   * small files (see graft.etl.LakeMaintenance) and prints the
@@ -20,13 +18,7 @@ object LakeCompact {
     val lakeDir = positional(0)
     val target = positional.lift(1).map(_.toLong).getOrElse(1000000L)
     val sortByPcr = flags.contains("--sort-by-pcr")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val r = graft.etl.LakeMaintenance.compactElements(spark, lakeDir, target, sortByPcr)
     println(s"compacted: files ${r.filesBefore} -> ${r.filesAfter}, rows ${r.rows}")
     spark.stop()

@@ -1,12 +1,24 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
-/** Writes `PLANS.md`: the formatted physical plan of each headline
-  * query at sf0.001 — the artifact backing the plan-quality claims
-  * (pushdown, pruning, broadcast selection, no cartesian fallbacks).
-  * Regenerate with: sbt "runMain graft.Plans [outFile]"
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+
+/** Formatted physical plans of declared queries at sf0.001. Two
+  * usages:
+  *
+  *  - `runMain graft.Plans [outFile]` writes `PLANS.md` (or outFile):
+  *    the plan of each headline query — the artifact backing the
+  *    plan-quality claims (pushdown, pruning, broadcast selection, no
+  *    cartesian fallbacks).
+  *  - `runMain graft.Plans <outDir> <suffix> <query>[,query...]` writes
+  *    one `<outDir>/<name>_<suffix>.txt` per named query — the
+  *    per-round before/after plan evidence under `plans/rN/` (PLANS.md
+  *    is the curated family-level document; these are the raw
+  *    per-query artifacts a verdict checks optimization claims
+  *    against), e.g. `runMain graft.Plans plans/r14 after
+  *    d32_cross_doc_repeats,p07_substring_funnel`.
   */
 object Plans {
 
@@ -248,16 +260,32 @@ object Plans {
     // literal re-verification candidate-sized)
     "d37_wide_cross_span")
 
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.length <= 1 || args.length == 3,
+      "usage: Plans [outFile] | Plans <outDir> <suffix> <query>[,<query>...]")
+    val names = args.lift(2).toSeq.flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty,
+      s"not in SparkEntry.queries: ${unknown.mkString(", ")}")
+    val spark = Session("local[4]", shuffle = 4)
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
+    if (args.length == 3) {
+      val Array(outDir, suffix, _) = args
+      Files.createDirectories(Paths.get(outDir))
+      names.foreach { name =>
+        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"),
+          formatted(SparkEntry.queries(name)(spark, sf)))
+        println(s"wrote $outDir/${name}_$suffix.txt")
+      }
+    } else writePlansMd(spark, sf, args.headOption.getOrElse("PLANS.md"))
+    spark.stop()
+  }
+
+  private def writePlansMd(spark: SparkSession, sf: String, out: String): Unit = {
     val sb = new StringBuilder
     sb ++= "# Physical plans (generated by `graft.Plans`, sf0.001)\n\n"
     sb ++= "Evidence for the plan-quality gates asserted in PlanSpec:\n"
@@ -278,10 +306,7 @@ object Plans {
     sb ++= "PlanSpec and sibling specs; this file is the human-readable\n"
     sb ++= "evidence, regenerated per round.\n"
     headline.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sf)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb ++= s"\n## $name\n\n```\n$plan```\n"
+      sb ++= s"\n## $name\n\n```\n${formatted(SparkEntry.queries(name)(spark, sf))}```\n"
     }
     // the hashed carrier's PRE-CHECKPOINT hash pass (round 13 — the
     // committed d37 plan above shows only post-checkpoint stages, so
@@ -296,12 +321,9 @@ object Plans {
         .select("doc_id", "text", "source")
       val pre = graft.ops.SuffixArray.hashPrefilter(
         graft.ops.SuffixArray.hashGramRows(base, 40))
-      val plan = pre.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb ++= s"\n## d37_wide_cross_span — pre-checkpoint hash pass (hashGramRows → hashPrefilter, minLen=40)\n\n```\n$plan```\n"
+      sb ++= s"\n## d37_wide_cross_span — pre-checkpoint hash pass (hashGramRows → hashPrefilter, minLen=40)\n\n```\n${formatted(pre)}```\n"
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")
-    spark.stop()
   }
 }

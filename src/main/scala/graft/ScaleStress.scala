@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Curation, Dedup, Graph, Pipeline, Segmentation, Similarity}
@@ -65,21 +65,7 @@ object ScaleStress {
   def main(args: Array[String]): Unit = {
     val scales = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 3, 10)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same codegen-cache sizing as Bench (see the comment there):
-      // the iterative ops here mint hundreds of distinct plans per
-      // scale point; the default 100-entry cache adds recompile noise
-      // to exactly the curves this harness exists to measure
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
-      .getOrCreate()
+    val spark = Session(shuffle = 8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs0 = Tables.load(spark, sfDir, "documents")

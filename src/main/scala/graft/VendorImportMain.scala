@@ -2,8 +2,6 @@ package graft
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.JdbcMirror
 import graft.sources.{VendorImport, XlsxSheetProvider}
 
@@ -86,13 +84,7 @@ object VendorImportMain {
     val f = new File(filePath)
     require(f.exists(), s"Excel file not found: $filePath")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     try {
       val provider =
         if (f.isDirectory) new VendorImport.CsvDirProvider(spark, filePath)

@@ -1,31 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB oracle compare and failed.json
+  * (`{name: "ErrClass: message"}`) for every query that threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same codegen-cache sizing as Bench (see the comment there):
-      // 229 queries × the default 100-entry cache = constant
-      // regenerate/recompile churn; wall-time only, results unchanged
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session, shuffle sizing included: the oracle gate checks
+    // the engine the bench times
+    val spark = Session(shuffle = Session.dataShuffle)
     new java.io.File(outDir).mkdirs()
     // Queries run from a small thread pool: Spark's scheduler accepts
     // concurrent job submission, and most of these queries are too small
     // to fill local[cpus] alone — 4-way submission roughly halves the
     // dump's wall time. Errors are captured per query, never swallowed.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     // VERIFY_ONLY=t12_bpe_merges,t13_bpe_encode dumps a subset — the
     // iteration aid mirroring Bench's BENCH_ONLY; unknown names fail
     // loudly for the same reason (a typo must not verify nothing and
@@ -43,6 +37,7 @@ object Verify {
         SparkEntry.queries.filter { case (n, _) => want(n) }
       case None => SparkEntry.queries
     }
+    val failed = new java.util.concurrent.ConcurrentSkipListMap[String, String]()
     val tasks = selected.toSeq.map { case (name, fn) =>
       pool.submit(new Runnable {
         override def run(): Unit =
@@ -50,6 +45,8 @@ object Verify {
             .parquet(s"$outDir/$name")
           catch { case scala.util.control.NonFatal(e) =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            failed.put(name,
+              s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
           }
       })
     }
@@ -59,27 +56,16 @@ object Verify {
     // heap (or hanging on live pool threads)
     try { tasks.foreach(_.get()); pool.shutdown() }
     catch { case t: Throwable => pool.shutdownNow(); throw t }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // oracle SQL may reference run-dependent paths (j01's corpus dir is
     // keyed by the SF basename) — substitute before dumping, so the
     // DuckDB compare always reads what THIS run wrote
-    val sfBase = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace(graft.queries.JsonlQueries.SfBaseToken, sfBase))}"
-      }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val sfBase = Paths.get(sfDir).getFileName.toString
+    val oracle = JObject(SparkEntry.oracleSql.toList.map { case (k, v) =>
+      k -> JString(v.replace(graft.queries.JsonlQueries.SfBaseToken, sfBase))
+    })
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), compact(render(oracle)))
+    val failures = JObject(failed.asScala.toList.map { case (k, v) => k -> JString(v) })
+    Files.writeString(Paths.get(s"$outDir/failed.json"), compact(render(failures)))
     spark.stop()
   }
 }

@@ -37,12 +37,6 @@ object JdbcDdl {
   def commentOnTable(schema: String, tableRaw: String, elementPath: String): String =
     s"COMMENT ON TABLE ${q(schema)}.${q(tableRaw.toLowerCase)} IS '${elementPath.replace("'", "''")}';"
 
-  /** Schema evolution: add newly observed attribute columns
-    * (`main_ingest.py:252-272`).
-    */
-  def addColumn(schema: String, tableRaw: String, attrCol: String): String =
-    s"ALTER TABLE ${q(schema)}.${q(tableRaw.toLowerCase)} ADD COLUMN ${q(Sanitize.sanitizeXmlName(attrCol).toLowerCase)} TEXT;"
-
   /** FK with ON DELETE CASCADE over the tree edge (`main_ingest.py:605-617`),
     * name via the 63-byte truncation contract (FkNames).
     */
@@ -52,11 +46,6 @@ object JdbcDdl {
       s"ADD CONSTRAINT ${q(name)} FOREIGN KEY (${q("parent_element_id")}) " +
       s"REFERENCES ${q(schema)}.${q(parentRaw.toLowerCase)} (${q("element_id")}) ON DELETE CASCADE;"
   }
-
-  /** Existence probe for the FK (`main_ingest.py:586-603`). */
-  def fkExistsQuery: String =
-    "SELECT constraint_name FROM information_schema.table_constraints " +
-      "WHERE table_schema = ? AND table_name = ? AND constraint_name = ?;"
 
   /** Bootstrap control tables (`database_setup.py:66-95`), dialect-typed
     * so the same contract runs on engines without SERIAL/TIMESTAMPTZ or

@@ -1,61 +1,15 @@
 package graft.etl
 
 import java.security.MessageDigest
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-/** Distributed XML scan (SURVEY A1/A9): `binaryFile` source -> one parse
-  * task per file -> tall element-record DataFrame.
-  *
-  * Scale design: at 100 TB the unit of parallelism is the file — each of
-  * N executors pulls whole files (binaryFile splits by file) and runs the
-  * bounded-memory StAX flattener; no shuffle is involved in the parse
-  * stage at all. File md5 (the reference's audit fingerprint,
-  * `main_ingest.py:39-50`) is computed on the same pass over the bytes.
+/** File fingerprint (SURVEY A9): the md5 hex of a file's bytes, the
+  * reference's audit fingerprint (`main_ingest.py:39-50`). The ingest
+  * computes it on the same pass over the bytes as the parse
+  * ([[IngestPipeline.ingestDirectory]]).
   */
 object NemsisXmlReader {
 
   def md5Hex(bytes: Array[Byte]): String =
     MessageDigest.getInstance("MD5").digest(bytes)
       .map("%02x".format(_)).mkString
-
-  /** Read every XML file under `path` (glob ok) into the tall element
-    * DataFrame — one row per XML element, schema = ElementRecord.
-    * Files that fail to parse contribute zero rows (route them to the
-    * error flow via [[fileStatuses]]).
-    */
-  def readTall(
-      spark: SparkSession,
-      path: String,
-      idGen: XmlFlatten.IdGen = XmlFlatten.DeterministicId): DataFrame = {
-    import spark.implicits._
-    binaryFiles(spark, path)
-      .flatMap { case (p, bytes) =>
-        XmlFlatten.parse(bytes, p, md5Hex(bytes), idGen)
-      }
-      .toDF()
-  }
-
-  /** Per-file parse outcome: (source_file, file_md5, n_elements).
-    * n_elements == 0 -> parse failure or empty document; the reference
-    * logs `Error_Parsing_Empty` and quarantines (`main_ingest.py:386-397`).
-    */
-  def fileStatuses(
-      spark: SparkSession,
-      path: String,
-      idGen: XmlFlatten.IdGen = XmlFlatten.DeterministicId): DataFrame = {
-    import spark.implicits._
-    binaryFiles(spark, path)
-      .map { case (p, bytes) =>
-        (p, md5Hex(bytes), XmlFlatten.parse(bytes, p, md5Hex(bytes), idGen).size.toLong)
-      }
-      .toDF("source_file", "file_md5", "n_elements")
-  }
-
-  private def binaryFiles(
-      spark: SparkSession, path: String): Dataset[(String, Array[Byte])] = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select("path", "content")
-      .as[(String, Array[Byte])]
-  }
 }

@@ -164,17 +164,25 @@ case class BottomKMerge(child: Expression, k: Int,
 
 object KmvExpressions {
 
-  /** Column API (requires [[register]] once per session). `k` must be
-    * a literal — it is part of the sketch's identity, not data.
+  /** Column API, self-registering on the active session (the
+    * MediaExpressions pattern). `k` must be a literal — it is part of
+    * the sketch's identity, not data. The session the column is used
+    * in must be the thread's active one, or be built through
+    * `graft.Session` (which installs every function at build);
+    * otherwise call [[register]] on it first.
     */
-  def bottom_k_hashes(hashes: Column, k: Int): Column =
+  def bottom_k_hashes(hashes: Column, k: Int): Column = {
+    register(SparkSession.active)
     org.apache.spark.sql.functions.call_function("bottom_k_hashes",
       hashes, org.apache.spark.sql.functions.lit(k))
+  }
 
   /** Merge a column of persisted sketches into one sketch of size k. */
-  def bottom_k_merge(sketches: Column, k: Int): Column =
+  def bottom_k_merge(sketches: Column, k: Int): Column = {
+    register(SparkSession.active)
     org.apache.spark.sql.functions.call_function("bottom_k_merge",
       sketches, org.apache.spark.sql.functions.lit(k))
+  }
 
   /** (name, expression class, builder): the ONE function table both
     * [[register]] and `GraftExtensions` consume — a function added here
@@ -188,7 +196,5 @@ object KmvExpressions {
     ("bottom_k_merge", classOf[BottomKMerge],
       es => BottomKMerge(es.head, es(1).eval().asInstanceOf[Number].intValue())))
 
-  def register(spark: SparkSession): Unit = injectable.foreach { case (n, _, b) =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(n, b, "built-in")
-  }
+  def register(spark: SparkSession): Unit = GraftFunctions.register(spark, injectable)
 }

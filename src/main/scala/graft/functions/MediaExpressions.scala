@@ -265,7 +265,5 @@ object MediaExpressions {
     }
   }
 
-  def register(spark: SparkSession): Unit = injectable.foreach { case (n, _, b) =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(n, b, "built-in")
-  }
+  def register(spark: SparkSession): Unit = GraftFunctions.register(spark, injectable)
 }

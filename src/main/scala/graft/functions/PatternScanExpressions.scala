@@ -184,7 +184,5 @@ object PatternScanExpressions {
           arr.getUTF8String(i).toString)
       })))
 
-  def register(spark: SparkSession): Unit = injectable.foreach { case (n, _, b) =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(n, b, "built-in")
-  }
+  def register(spark: SparkSession): Unit = GraftFunctions.register(spark, injectable)
 }

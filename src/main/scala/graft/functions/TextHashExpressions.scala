@@ -768,7 +768,5 @@ object TextHashExpressions {
   /** Idempotent per-session registration (resolution goes through the
     * function registry — no private Spark internals).
     */
-  def register(spark: SparkSession): Unit = injectable.foreach { case (n, _, b) =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(n, b, "built-in")
-  }
+  def register(spark: SparkSession): Unit = GraftFunctions.register(spark, injectable)
 }

@@ -75,7 +75,5 @@ object TextNormExpressions {
       NfcNormalize(es.head)
     }))
 
-  def register(spark: SparkSession): Unit = injectable.foreach { case (n, _, b) =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(n, b, "built-in")
-  }
+  def register(spark: SparkSession): Unit = GraftFunctions.register(spark, injectable)
 }

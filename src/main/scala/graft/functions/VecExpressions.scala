@@ -260,19 +260,24 @@ case class SortedIntersectSize(left: Expression, right: Expression)
 
 object VecExpressions {
 
-  /** Column API (requires [[register]] once per session — resolution
+  /** Column API, self-registering (the MediaExpressions pattern): the
+    * wrappers are called from query builders that never touch this
+    * object, so each registers on the active session first. Resolution
     * goes through the function registry, keeping us off private Spark
-    * internals).
+    * internals. The session the column is used in must be the thread's
+    * active one, or be built through `graft.Session` (which installs
+    * every function at build); otherwise call [[register]] on it first.
     */
-  def vec_dot(a: Column, b: Column): Column =
+  def vec_dot(a: Column, b: Column): Column = {
+    register(SparkSession.active)
     org.apache.spark.sql.functions.call_function("vec_dot", a, b)
-  def vec_cosine(a: Column, b: Column): Column =
+  }
+  def vec_cosine(a: Column, b: Column): Column = {
+    register(SparkSession.active)
     org.apache.spark.sql.functions.call_function("vec_cosine", a, b)
+  }
 
-  /** Self-registering (the MediaExpressions pattern): dotQ is called
-    * from query builders that never touch this object, so the Column
-    * API registers on the active session first.
-    */
+  /** Self-registering, like [[vec_dot]]. */
   def vec_dot_q(a: Column, b: Column): Column = {
     register(SparkSession.active)
     org.apache.spark.sql.functions.call_function("vec_dot_q", a, b)
@@ -296,12 +301,8 @@ object VecExpressions {
     ("sorted_intersect_size", classOf[SortedIntersectSize],
       es => SortedIntersectSize(es.head, es(1))))
 
-  /** Register `vec_dot` / `vec_cosine` for SQL use in an existing
-    * session.
-    */
-  def register(spark: SparkSession): Unit = injectable.foreach { case (n, _, b) =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(n, b, "built-in")
-  }
+  /** Register the functions for SQL use in an existing session. */
+  def register(spark: SparkSession): Unit = GraftFunctions.register(spark, injectable)
 }
 
 /** Every native function on every install path: the extensions class
@@ -313,6 +314,15 @@ object GraftFunctions {
     VecExpressions.injectable ++ TextHashExpressions.injectable ++
       KmvExpressions.injectable ++ MediaExpressions.injectable ++
       TextNormExpressions.injectable ++ PatternScanExpressions.injectable
+
+  /** The per-session install path behind every object's `register`:
+    * (re)binds one function table in an existing session's registry.
+    */
+  def register(spark: SparkSession,
+      table: Seq[(String, Class[_], Seq[Expression] => Expression)]): Unit =
+    table.foreach { case (n, _, b) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(n, b, "built-in")
+    }
 }
 
 /** Session-extensions entry point: registers every native function at

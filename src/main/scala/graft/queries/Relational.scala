@@ -528,7 +528,6 @@ object Relational {
     // oracle-replayable (a window rank does in SQL what the bounded
     // tree does in one pass).
     "q35_kmv_distinct" -> ((s, d) => {
-      graft.functions.KmvExpressions.register(s)
       t(s, d, "documents")
         .select(col("source"), col("text"),
           graft.ops.Dedup.md5Hash32(col("text")).as("hv"))
@@ -552,7 +551,6 @@ object Relational {
     // Deterministic md5 hashes keep the whole two-level plan
     // oracle-replayable.
     "q36_kmv_merge" -> ((s, d) => {
-      graft.functions.KmvExpressions.register(s)
       val docs = t(s, d, "documents")
       val perSource = docs
         .select(col("source"), graft.ops.Dedup.md5Hash32(col("text")).as("hv"))
@@ -707,7 +705,6 @@ object Relational {
     // per source — the corpus is scanned once the day it arrives and
     // never again.
     "q46_sketch_roundtrip" -> ((s, d) => {
-      graft.functions.KmvExpressions.register(s)
       val dir = sketchDir(d)
       val docs = t(s, d, "documents").where(col("text").isNotNull)
       def perSource(df: DataFrame): DataFrame = df

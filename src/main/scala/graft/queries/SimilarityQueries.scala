@@ -243,7 +243,6 @@ object SimilarityQueries {
     // order makes scores engine-specific, so no oracle — rows-only.
     "s04_topk_native" -> ((s, d) => {
       import graft.functions.VecExpressions
-      VecExpressions.register(s)
       val e = Tables.load(s, d, "embeddings")
       val q = e.where(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))

@@ -8,10 +8,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pushdown, column pruning all apply).
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
     else spark.read.parquet(s"$dir/$name.parquet")
@@ -46,8 +42,4 @@ object Tables {
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
     }
   }
-
-  /** Register every table as a temp view so `spark.sql` works too. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

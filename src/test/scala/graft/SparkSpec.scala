@@ -12,6 +12,12 @@ trait SparkSpec extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkSpec {
+  /** A plain builder on purpose, NOT `graft.Session`: it installs no
+    * `GraftExtensions`, like a caller that invokes `SparkEntry.queries`
+    * on a session of its own. So every spec exercises the
+    * self-registering Column wrappers in `graft.functions`, the path
+    * such a session depends on.
+    */
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[2]")

@@ -92,6 +92,20 @@ class IngestPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(v2.map(_.getString(0)).toSeq == Seq("v2"))
   }
 
+  test("duplicateIngests flags a file ingested twice, by md5") {
+    val landing = tmpDir("graft_landing_dup")
+    val lake = tmpDir("graft_lake_dup").toString
+    Files.writeString(landing.resolve("f1.xml"), xml("pcr-1", "v1"))
+    Files.writeString(landing.resolve("f2.xml"), xml("pcr-2", "v2"))
+    IngestPipeline.ingestDirectory(spark, s"$landing/*.xml", lake)
+    IngestPipeline.ingestDirectory(spark, s"$landing/f1.xml", lake)
+
+    val dups = Audit.duplicateIngests(spark.read.parquet(IngestPipeline.auditPath(lake)))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val f1Md5 = NemsisXmlReader.md5Hex(Files.readAllBytes(landing.resolve("f1.xml")))
+    assert(dups == Seq((f1Md5, 2L)))
+  }
+
   test("keyed overwrite leaves null-keyed rows alone") {
     import spark.implicits._
     val existing = Seq(("a", Some("k1")), ("b", None), ("c", Some("k2")))

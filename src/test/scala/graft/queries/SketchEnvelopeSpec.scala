@@ -130,4 +130,17 @@ class SketchEnvelopeSpec extends AnyFunSuite with SparkSpec {
         s"query $q: native ${native(q)} vs quantized ${quantized(q)}")
     }
   }
+
+  test("q40 resolves its KMV functions on a fresh session, run first") {
+    // a new session has a function registry of its own, so nothing an
+    // earlier query registered is visible there: the sketch Column API
+    // must self-register on the active session (this once failed with
+    // UNRESOLVED_ROUTINE bottom_k_hashes)
+    val fresh = spark.newSession()
+    org.apache.spark.sql.SparkSession.setActiveSession(fresh)
+    try {
+      val rows = SparkEntry.queries("q40_kmv_intersect")(fresh, sf).collect()
+      assert(rows.nonEmpty)
+    } finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+  }
 }
